@@ -234,6 +234,16 @@ def decode_envelope(
     return result.select(*out_cols, *meta_cols)
 
 
+def _empty_props() -> Column:
+    """The `props` of a message without properties: an empty map, not a
+    null one. The sink stores both as an empty map, but a null map (or
+    array) costs time quadratic in the rows per Arrow batch on the
+    JVM -> Python sink hop: a burst written as one task took +0.2 s at
+    15k rows and +1.4 s at 30k (4-core VM); an empty map costs nothing
+    extra."""
+    return F.create_map().cast(T.MapType(T.StringType(), T.StringType()))
+
+
 def encode_rows(
     df: DataFrame,
     options: dict | None = None,
@@ -316,7 +326,7 @@ def encode_rows(
             F.array(*[F.col(c).cast(T.StringType()) for c in prop_columns]),
         )
     else:
-        props = F.lit(None).cast(T.MapType(T.StringType(), T.StringType()))
+        props = _empty_props()
 
     born_ts = (
         F.col(born_ts_col).cast(T.TimestampType())
@@ -370,7 +380,7 @@ def encode_simple_key_value(
     return df.select(
         F.col(key_field).cast(T.StringType()).alias("keys"),
         F.lit(None).cast(T.StringType()).alias("tags"),
-        F.lit(None).cast(T.MapType(T.StringType(), T.StringType())).alias("props"),
+        _empty_props().alias("props"),
         F.encode(F.col(value_field).cast(T.StringType()), encoding).alias("value"),
         F.current_timestamp().alias("born_ts"),
     )

@@ -26,7 +26,9 @@ import os
 import re
 import uuid
 
+import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 SEGMENT_RE = re.compile(r"^(\d{20})-(\d+)\.parquet$")
@@ -162,7 +164,9 @@ class Broker:
 
         Assigns contiguous offsets per queue in deterministic order
         (sorted by tmp path within each queue), stamps store_ts/msg_id/
-        offset, renames into place. Returns {queue_id: (start, end)}.
+        offset, and writes every final segment as `.inprogress` before
+        renaming any into place, so a concurrent reader sees the commit
+        during the rename loop only. Returns {queue_id: (start, end)}.
 
         If epoch_id is given and this epoch was already committed, staged
         files are discarded (idempotent streaming epoch retry).
@@ -183,6 +187,7 @@ class Broker:
             by_queue.setdefault(queue_id, []).append(path)
 
         result: dict[int, tuple[int, int]] = {}
+        moves: list[tuple[str, str]] = []  # (staged tmp path, final path)
         for queue_id, paths in sorted(by_queue.items()):
             qdir = _queue_dir(self.root, topic, queue_id)
             os.makedirs(qdir, exist_ok=True)
@@ -191,12 +196,11 @@ class Broker:
             for path in sorted(paths):
                 tbl = pq.read_table(path)
                 n = tbl.num_rows
-                offsets = pa.array(range(next_off, next_off + n), pa.int64())
-                msg_ids = pa.array(
-                    [f"{topic}-{queue_id}-{o}" for o in range(next_off, next_off + n)],
-                    pa.string(),
+                offsets = pa.array(np.arange(next_off, next_off + n, dtype=np.int64))
+                msg_ids = pc.binary_join_element_wise(
+                    f"{topic}-{queue_id}-", offsets.cast(pa.string()), ""
                 )
-                store = pa.array([store_ts_us] * n, pa.int64())
+                store = pa.repeat(pa.scalar(store_ts_us, pa.int64()), n)
                 tbl = (
                     tbl.set_column(0, "offset", offsets)
                     .set_column(2, "store_ts", store)
@@ -204,10 +208,12 @@ class Broker:
                 )
                 final = os.path.join(qdir, f"{next_off:020d}-{n}.parquet")
                 pq.write_table(tbl, final + ".inprogress")
-                os.rename(final + ".inprogress", final)
-                os.remove(path)
+                moves.append((path, final))
                 next_off += n
             result[queue_id] = (q_start, next_off)
+        for path, final in moves:
+            os.rename(final + ".inprogress", final)
+            os.remove(path)
         if marker:
             with open(marker, "w") as fh:
                 fh.write("done")
