@@ -418,23 +418,6 @@ class StagedBatch(WriterCommitMessage):
         self.staged = staged  # (topic, queue_id, tmp_path)
 
 
-def _nulls_to_empty_maps(maps: pa.MapArray) -> pa.MapArray:
-    """Rebuild a map array with every null slot as an empty map, from its
-    offsets, keys and items (map arrays have no fill_null). Entries a
-    null slot still spans in the child arrays are dropped."""
-    offs = maps.offsets.to_numpy()
-    lo, hi = int(offs[0]), int(offs[-1])
-    sizes = np.diff(offs)
-    valid = maps.is_valid().to_numpy(zero_copy_only=False)
-    keys, items = maps.keys.slice(lo, hi - lo), maps.items.slice(lo, hi - lo)
-    if sizes[~valid].any():
-        keep = pa.array(np.repeat(valid, sizes))
-        keys, items = keys.filter(keep), items.filter(keep)
-    sizes = np.where(valid, sizes, 0)
-    offsets = np.concatenate([[0], np.cumsum(sizes)]).astype(np.int32)
-    return pa.MapArray.from_arrays(pa.array(offsets), keys, items)
-
-
 def _write_batches(root: str, topic: str, num_queues: int, batches):
     """Task-side write, Arrow-native: consume `pa.RecordBatch`es (the
     DataSourceArrowWriter contract), route rows to (topic, queue)
@@ -487,9 +470,12 @@ def _write_batches(root: str, topic: str, num_queues: int, batches):
         if props_c is None:
             props_arr = pa.array([[]] * n, pa.map_(pa.string(), pa.string()))
         elif props_c.null_count:
-            # nulls become EMPTY maps (historic row-writer behavior)
-            props_arr = _nulls_to_empty_maps(props_c).cast(
-                pa.map_(pa.string(), pa.string())
+            # nulls become EMPTY maps (historic row-writer behavior);
+            # map arrays have no fill_null, so only this rare case
+            # drops to pylist
+            props_arr = pa.array(
+                [m if m is not None else [] for m in props_c.to_pylist()],
+                pa.map_(pa.string(), pa.string()),
             )
         else:
             props_arr = props_c.cast(pa.map_(pa.string(), pa.string()))

@@ -225,3 +225,66 @@ def test_encoded_round_trip_matches_null_props_encoding(spark, tmp_path, options
         got[topic] = sorted(tuple(sorted(v.items()) if isinstance(v, dict) else v
                                   for v in r) for r in back.select(*cols).collect())
     assert got["now"] == got["legacy"] and len(got["now"]) == 3
+
+
+def test_sink_routing_of_mixed_batches_matches_per_row_rule(tmp_path):
+    """One task writes two batches mixing keyed rows, null-key rows, a
+    partly null queue_id and null/empty/other topics. Every row lands
+    where the per-row rule puts it, in row order: an explicit queue_id,
+    else crc32(key) % numQueues, else the task's round-robin counter
+    (carried across batches); a null or empty topic falls back to the
+    option topic. Null props are stored as empty maps."""
+    import zlib
+
+    root, num_queues = str(tmp_path), 4
+    rows = [  # (key, queue_id, topic, props)
+        ("k1", None, None, None),
+        (None, None, "", {"a": "1"}),
+        (None, 2, "other", None),
+        ("k2", 3, None, None),
+        (None, None, "other", None),
+        ("k3", None, "other", {"b": "2"}),
+        (None, None, None, None),
+        ("k1", None, "", None),
+        (None, None, None, {}),
+        (None, 0, "other", None),
+    ]
+    schema = pa.schema([("keys", pa.string()), ("queue_id", pa.int32()),
+                        ("topic", pa.string()), ("props", MAP),
+                        ("value", pa.binary())])
+
+    def batch(lo, hi):
+        part = rows[lo:hi]
+        return pa.RecordBatch.from_arrays([
+            pa.array([r[0] for r in part], pa.string()),
+            pa.array([r[1] for r in part], pa.int32()),
+            pa.array([r[2] for r in part], pa.string()),
+            pa.array([None if r[3] is None else list(r[3].items()) for r in part], MAP),
+            pa.array([str(i).encode() for i in range(lo, hi)]),
+        ], schema=schema)
+
+    staged = ds._write_batches(root, "t", num_queues, [batch(0, 6), batch(6, 10)])
+    ds._commit_staged(root, staged.staged, None)
+
+    want, rr, next_off = {}, 0, {}
+    for i, (key, qid, topic, props) in enumerate(rows):
+        if qid is None:
+            if key is not None:
+                qid = zlib.crc32(key.encode("utf-8")) % num_queues
+            else:
+                qid, rr = rr % num_queues, rr + 1
+        dest = (topic or "t", qid)
+        off = next_off.get(dest, 0)
+        next_off[dest] = off + 1
+        want[str(i).encode()] = (*dest, off, sorted((props or {}).items()))
+
+    broker = Broker(root)
+    got = {}
+    for topic in ("t", "other"):
+        for q in broker.queues(topic):
+            tbl = broker.read_range(topic, q, 0, broker.latest_offset(topic, q))
+            for off, body, props in zip(tbl.column("offset").to_pylist(),
+                                        tbl.column("body").to_pylist(),
+                                        tbl.column("props").to_pylist()):
+                got[body] = (topic, q, off, sorted(props))
+    assert got == want
